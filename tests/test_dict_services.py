@@ -449,9 +449,8 @@ def _py_not_topk(py_stats, terms, exclude, k, mode="OR"):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
 @pytest.mark.parametrize("mode", ["OR", "AND"])
-def test_not_queries_match_oracle(idx, py_stats, strategy, mode):
+def test_not_queries_match_oracle(idx, py_stats, mode):
     from wikitfidf_spark.index.query import Query
 
     terms, exclude = ["arg_ctx77", "arg_cfg"], ("arg_ctx",)
@@ -459,7 +458,7 @@ def test_not_queries_match_oracle(idx, py_stats, strategy, mode):
     got = [
         (r["doc_id"], r["score_q"])
         for r in idx.topk_batch(
-            [Query(0, terms, mode, 10, exclude=exclude)], strategy=strategy
+            [Query(0, terms, mode, 10, exclude=exclude)]
         ).collect()
     ]
     assert got == want and len(got) > 0
@@ -502,22 +501,21 @@ def test_not_overlap_raises(idx):
 # ---------------- pagination (offset) ----------------
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_pagination_pages_tile_the_ranking(idx, strategy):
+def test_pagination_pages_tile_the_ranking(idx):
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
-    full = idx.topk_batch([Query(0, terms, "OR", 30)], strategy=strategy).collect()
+    full = idx.topk_batch([Query(0, terms, "OR", 30)]).collect()
     pages = []
     for off in (0, 10, 20):
         pages += idx.topk_batch(
-            [Query(0, terms, "OR", 10, offset=off)], strategy=strategy
+            [Query(0, terms, "OR", 10, offset=off)]
         ).collect()
     tile = sorted((r["rank"], r["doc_id"], r["score_q"]) for r in pages)
     want = sorted((r["rank"], r["doc_id"], r["score_q"]) for r in full)
     assert tile == want and len(want) == 30
     # absolute ranks: page 2 starts at rank 11
-    p2 = idx.topk_batch([Query(0, terms, "OR", 10, offset=10)], strategy=strategy).collect()
+    p2 = idx.topk_batch([Query(0, terms, "OR", 10, offset=10)]).collect()
     assert min(r["rank"] for r in p2) == 11
 
 
@@ -531,38 +529,25 @@ def test_pagination_negative_offset_raises(idx):
 # ---------------- cursor pagination (search_after) ----------------
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_search_after_tiles_like_offset(idx, strategy):
+def test_search_after_tiles_like_offset(idx):
     """Walking pages by cursor yields EXACTLY the offset path's pages
     (same docs, same scores; cursor ranks are page-relative)."""
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
-    full = idx.topk_batch([Query(0, terms, "OR", 30)], strategy=strategy).collect()
+    full = idx.topk_batch([Query(0, terms, "OR", 30)]).collect()
     assert len(full) == 30
     by_rank = sorted(full, key=lambda r: r["rank"])
     cursor, walked = None, []
     for _ in range(3):
         page = idx.topk_batch(
-            [Query(0, terms, "OR", 10, search_after=cursor)], strategy=strategy
+            [Query(0, terms, "OR", 10, search_after=cursor)]
         ).collect()
         page = sorted(page, key=lambda r: r["rank"])
         assert [r["rank"] for r in page] == list(range(1, 11))  # page-relative
         walked += [(r["doc_id"], r["score_q"]) for r in page]
         cursor = (page[-1]["score_q"], page[-1]["doc_id"])
     assert walked == [(r["doc_id"], r["score_q"]) for r in by_rank]
-
-
-def test_search_after_cross_strategy_identical(idx):
-    from wikitfidf_spark.index.query import Query
-
-    terms = ["arg_ctx77", "arg_cfg"]
-    first = idx.topk(terms, k=5).collect()
-    cur = (first[-1]["score_q"], first[-1]["doc_id"])
-    a = idx.topk_batch([Query(0, terms, "OR", 5, search_after=cur)], strategy="taat").collect()
-    b = idx.topk_batch([Query(0, terms, "OR", 5, search_after=cur)], strategy="wand").collect()
-    key = lambda rows: sorted((r["rank"], r["doc_id"], r["score_q"]) for r in rows)
-    assert key(a) == key(b) and len(a) == 5
 
 
 def test_search_after_rejects_offset_combo(idx):
@@ -596,8 +581,7 @@ def _py_boosted_topk(py_stats, terms, boosts, k):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_boosted_topk_matches_oracle(idx, py_stats, strategy):
+def test_boosted_topk_matches_oracle(idx, py_stats):
     from wikitfidf_spark.index.query import Query
 
     terms, boosts = ["arg_ctx77", "arg_cfg"], (1, 3)
@@ -605,7 +589,7 @@ def test_boosted_topk_matches_oracle(idx, py_stats, strategy):
     got = [
         (r["doc_id"], r["score_q"])
         for r in idx.topk_batch(
-            [Query(0, terms, "OR", 10, boosts=boosts)], strategy=strategy
+            [Query(0, terms, "OR", 10, boosts=boosts)]
         ).collect()
     ]
     assert got == want and len(got) == 10
@@ -740,8 +724,7 @@ def test_snippets_empty_terms_raises(idx, corpus):
         idx.snippets(corpus, [], k=5)
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_exclude_docs_per_query(idx, strategy):
+def test_exclude_docs_per_query(idx):
     """Query.exclude_docs drops exactly those doc ids from ONE query's
     result with ranks re-closed (the in-kernel mechanism more_like_this
     uses to exclude its source doc), while a sibling query in the same
@@ -750,14 +733,13 @@ def test_exclude_docs_per_query(idx, strategy):
 
     top = [r["term"] for r in idx.dictionary.orderBy(F.desc("df")).limit(1).collect()]
     base = sorted(
-        idx.topk_batch([Query(0, top, "OR", 6)], strategy=strategy).collect(),
+        idx.topk_batch([Query(0, top, "OR", 6)]).collect(),
         key=lambda r: r["rank"],
     )
     assert len(base) >= 3
     drop = (base[0]["doc_id"], base[2]["doc_id"])
     got = idx.topk_batch(
         [Query(0, top, "OR", 4, exclude_docs=drop), Query(1, top, "OR", 3)],
-        strategy=strategy,
     ).collect()
     q0 = sorted((r for r in got if r["query_id"] == 0), key=lambda r: r["rank"])
     q1 = sorted((r for r in got if r["query_id"] == 1), key=lambda r: r["rank"])
@@ -864,9 +846,8 @@ def _py_msm_topk(py_stats, terms, k, msm):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
 @pytest.mark.parametrize("msm", [2, 3])
-def test_min_should_match_matches_oracle(idx, py_stats, strategy, msm):
+def test_min_should_match_matches_oracle(idx, py_stats, msm):
     from wikitfidf_spark.index.query import Query
 
     # triple chosen so the fixture has docs at every match width
@@ -878,7 +859,7 @@ def test_min_should_match_matches_oracle(idx, py_stats, strategy, msm):
         (r["doc_id"], r["score_q"])
         for r in sorted(
             idx.topk_batch(
-                [Query(0, terms, "OR", 10, min_should_match=msm)], strategy=strategy
+                [Query(0, terms, "OR", 10, min_should_match=msm)]
             ).collect(),
             key=lambda r: r["rank"],
         )
@@ -886,16 +867,15 @@ def test_min_should_match_matches_oracle(idx, py_stats, strategy, msm):
     assert got == want
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_msm_full_width_equals_and(idx, strategy):
+def test_msm_full_width_equals_and(idx):
     """msm == n_terms selects the AND doc set with identical scores."""
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
     via_msm = idx.topk_batch(
-        [Query(0, terms, "OR", 10, min_should_match=2)], strategy=strategy
+        [Query(0, terms, "OR", 10, min_should_match=2)]
     ).collect()
-    via_and = idx.topk_batch([Query(0, terms, "AND", 10)], strategy=strategy).collect()
+    via_and = idx.topk_batch([Query(0, terms, "AND", 10)]).collect()
     key = lambda rows: [(r["doc_id"], r["score_q"], r["rank"]) for r in sorted(rows, key=lambda r: r["rank"])]
     assert key(via_msm) == key(via_and)
 
@@ -1230,6 +1210,13 @@ def test_function_score_matches_hand_computation(idx):
         idx.function_score_topk(terms, k=0)
 
 
+def test_function_score_rejects_non_integral_factor(idx):
+    """A string docmeta column is rejected by name and type instead of
+    being cast to long (which would yield null scores)."""
+    with pytest.raises(ValueError, match="'topic' must be integral, got string"):
+        idx.function_score_topk_batch([(0, ["arg_cfg"])], factor="topic")
+
+
 def test_synonym_topk_batch_equals_per_call(idx, py_stats):
     """synonym_topk_batch == a loop of single calls per panel, with
     per-panel group statistics kept separate under the composite
@@ -1290,6 +1277,21 @@ def test_simple_query_string_routes_each_production(idx, py_stats):
         idx.simple_query_string(f'"{hot[0]} {hot[1]}" {hot[2]}')
     assert idx.simple_query_string("of at", k=5).count() == 0
 
+
+
+def test_simple_query_string_apostrophes_and_unterminated_phrase(idx, py_stats):
+    """Only double quotes delimit a phrase: apostrophes are ordinary
+    word characters (routed like search()), and an unterminated
+    double-quoted phrase is a clear ValueError."""
+    _, _, dfc, _ = py_stats
+    hot = sorted(dfc, key=lambda t: (-dfc[t], t))[:2]
+    key = lambda rows: [(r["doc_id"], r["score_q"]) for r in sorted(rows, key=lambda x: x["rank"])]
+    for text in ("'tis", "rock '90s", f"'{hot[0]} {hot[1]}'s"):
+        got = idx.simple_query_string(text, k=8).collect()
+        assert key(got) == key(idx.search(text, k=8).collect()), text
+    assert idx.simple_query_string(f"'{hot[0]} {hot[1]}'s", k=8).count() > 0
+    with pytest.raises(ValueError, match="unterminated quoted phrase"):
+        idx.simple_query_string(f'"{hot[0]} {hot[1]}')
 
 def test_bucket_top_hits_n1_equals_collapse(idx):
     """bucket_top_hits with n=1 is exactly collapse_topk: same

@@ -125,6 +125,24 @@ def test_postings_term_lookup_prunes_row_groups(spark, tmp_path_factory):
     assert e2.count("EqualTo(term,arg_cfg_get)") >= 2  # structure AND scores scans
 
 
+
+def test_topk_scan_ships_only_scored_columns(spark, tmp_path_factory):
+    """The fused-state top-k plan reads the payload columns the kernel
+    decodes; block_max_score is still written but never read, so it
+    must be pruned out of the parquet scan."""
+    from wikitfidf_spark.index.query import Query
+
+    d = str(tmp_path_factory.mktemp("idx_topk_schema"))
+    docs = make_code_files(spark, n_docs=120, seed=42)
+    build_index(spark, docs, d, IndexConfig(n_shards=2, n_salts=2), resume=False)
+    idx = InvertedIndex(spark, d)
+    assert idx.combined is not None  # fused single-file state
+    assert "block_max_score" in idx.postings.columns  # format unchanged
+    e = explain_str(idx.topk_batch([Query(0, ["arg_cfg", "arg_ctx"], "OR", 5)]))
+    schemas = [ln for ln in e.splitlines() if "ReadSchema:" in ln and "scores_payload" in ln]
+    assert schemas, e
+    assert all("block_max_score" not in ln for ln in schemas), schemas
+
 def test_score_refresh_plan_is_shuffle_free(spark, tmp_path_factory):
     """The incremental-update cornerstone: score_postings_df must be a
     pure map over the structure scan — a broadcast dictionary join and

@@ -1,13 +1,15 @@
-"""WAND algorithm unit tests against a brute-force scorer, exercising
-block boundaries, pruning, sub-shard lists, and tie-breaks."""
+"""Top-k kernel unit tests: ``_taat_eval`` over ``_decode_shard``
+output against a brute-force scorer, on rows made by the production
+encoder (block boundaries, sub-shard lists, tie-breaks).  No Spark."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from wikitfidf_spark.index import codec
-from wikitfidf_spark.index.query import wand_top_k
+from wikitfidf_spark.index.query import _decode_shard, _taat_eval
 
 
 def _make_row(docs, scores, block_size=4):
@@ -51,9 +53,21 @@ def _brute(term_lists, k, mode, msm=0):
     return sorted(items, key=lambda t: (-t[1], t[0]))[:k]
 
 
+def _top_k(rows, k, mode, msm=0):
+    """Score one query over ``rows`` (term -> encoded sub-shard rows)
+    through the shard decode + TAAT kernel -> [(doc, score)]."""
+    pdf = pd.DataFrame([
+        {"shard": 0, "term": t, "sub_shard": i, **r}
+        for t, lst in rows.items() for i, r in enumerate(lst)
+    ])
+    qspec = [(0, list(rows), mode, k, (), None, None, msm, None)]
+    out = _taat_eval(_decode_shard(pdf), qspec)
+    return list(zip(out["doc_id"].tolist(), out["score_q"].tolist()))
+
+
 @pytest.mark.parametrize("mode", ["OR", "AND"])
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-def test_wand_randomized(mode, seed):
+def test_taat_randomized(mode, seed):
     rng = np.random.RandomState(seed)
     term_lists = {}
     rows = {}
@@ -65,15 +79,14 @@ def test_wand_randomized(mode, seed):
         term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
         rows[t] = [_make_row(docs, scores, block_size=int(rng.choice([2, 4, 64])))]
     for k in (1, 5, 50):
-        assert wand_top_k(rows, k, mode) == _brute(term_lists, k, mode), (mode, seed, k)
+        assert _top_k(rows, k, mode) == _brute(term_lists, k, mode), (mode, seed, k)
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 @pytest.mark.parametrize("msm", [2, 3, 5])
-def test_wand_min_should_match_randomized(seed, msm):
+def test_taat_min_should_match_randomized(seed, msm):
     """msm-constrained OR vs brute force: only docs matching >= msm
-    distinct terms qualify; scores stay full OR sums; heap pruning must
-    not drop a qualifying doc."""
+    distinct terms qualify; scores stay full OR sums."""
     rng = np.random.RandomState(100 + seed)
     term_lists = {}
     rows = {}
@@ -85,24 +98,23 @@ def test_wand_min_should_match_randomized(seed, msm):
         term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
         rows[t] = [_make_row(docs, scores, block_size=int(rng.choice([2, 4, 64])))]
     for k in (1, 5, 50):
-        got = wand_top_k(rows, k, "OR", msm=msm)
+        got = _top_k(rows, k, "OR", msm=msm)
         assert got == _brute(term_lists, k, "OR", msm=msm), (seed, msm, k)
 
 
-def test_wand_msm_equals_and_at_full_width():
+def test_taat_msm_equals_and_at_full_width():
     """msm == n_terms in OR mode selects exactly the AND doc set (and
     scores agree, since AND docs score over every term anyway)."""
     rng = np.random.RandomState(7)
-    term_lists, rows = {}, {}
+    rows = {}
     for t in "abc":
         docs = np.sort(rng.choice(500, size=120, replace=False)).astype(np.int64)
         scores = rng.randint(1, 10**6, size=120)
-        term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
         rows[t] = [_make_row(docs, scores)]
-    assert wand_top_k(rows, 25, "OR", msm=3) == wand_top_k(rows, 25, "AND")
+    assert _top_k(rows, 25, "OR", msm=3) == _top_k(rows, 25, "AND")
 
 
-def test_wand_sub_shards_merge():
+def test_taat_sub_shards_merge():
     """A term split into disjoint sub-lists must behave as one list."""
     rng = np.random.RandomState(9)
     docs = np.sort(rng.choice(5000, size=300, replace=False)).astype(np.int64)
@@ -113,12 +125,12 @@ def test_wand_sub_shards_merge():
         _make_row(docs[1::2], scores[1::2]),
     ]}
     for k in (3, 20):
-        assert wand_top_k(whole, k, "OR") == wand_top_k(split, k, "OR")
+        assert _top_k(whole, k, "OR") == _top_k(split, k, "OR")
 
 
 def test_tie_break_smallest_doc_wins():
     rows = {"t": [_make_row([5, 1, 9], [7, 7, 7])]}
-    assert wand_top_k(rows, 2, "OR") == [(1, 7), (5, 7)]
+    assert _top_k(rows, 2, "OR") == [(1, 7), (5, 7)]
 
 
 def test_and_requires_all_terms():
@@ -126,7 +138,7 @@ def test_and_requires_all_terms():
         "a": [_make_row([1, 2, 3], [10, 10, 10])],
         "b": [_make_row([2, 3, 4], [5, 5, 5])],
     }
-    assert wand_top_k(rows, 10, "AND") == [(2, 15), (3, 15)]
+    assert _top_k(rows, 10, "AND") == [(2, 15), (3, 15)]
 
 
 def test_merged_lists_pairs_union_halves():

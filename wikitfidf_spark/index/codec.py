@@ -18,9 +18,11 @@ doc-partitioned shard):
   d[0]=0, d[j]=doc[j]-doc[j-1] within the block.
 - tfs and quantized impact scores: plain varint streams, block-aligned
   via byte-offset sidecars.
-- sidecars (parquet arrays): block_firsts/block_lasts (absolute doc ids,
-  enables skipping), block_max_score (int64 quantized — integer WAND is
-  bit-deterministic), per-stream byte offsets.
+- sidecars (parquet arrays): block_firsts/block_lasts (absolute doc ids),
+  block_max_score (int64 quantized per-block maximum) and per-stream
+  byte offsets.  block_max_score is written but not read by the engine:
+  serving decodes whole lists (term-at-a-time), so no scorer needs a
+  per-block bound.  It stays in the on-disk format.
 
 Everything is numpy array code — no per-element Python in encode/decode.
 """
@@ -201,34 +203,6 @@ def decode_tfs_dls(enc_row) -> tuple[np.ndarray, np.ndarray]:
     tfs = varint_decode(enc_row["tfs_payload"], n)
     dls = varint_decode(enc_row["dls_payload"], n)
     return tfs, dls
-
-
-def decode_block_docs(
-    docs_payload: bytes | memoryview,
-    block_firsts: np.ndarray,
-    block_counts: np.ndarray,
-    block_doc_offs: np.ndarray,
-    i: int,
-) -> np.ndarray:
-    """Decode the doc_ids of block i only (the WAND skip path)."""
-    cnt = int(block_counts[i])
-    off = int(block_doc_offs[i])
-    end = int(block_doc_offs[i + 1]) if i + 1 < len(block_doc_offs) else None
-    deltas = varint_decode(memoryview(docs_payload)[off:end], cnt)
-    base = to_unsigned(np.array([block_firsts[i]], dtype=np.int64))[0]
-    return to_signed(base + np.cumsum(deltas, dtype=np.uint64))
-
-
-def decode_block_stream(
-    payload: bytes | memoryview,
-    block_counts: np.ndarray,
-    offs: np.ndarray,
-    i: int,
-) -> np.ndarray:
-    cnt = int(block_counts[i])
-    off = int(offs[i])
-    end = int(offs[i + 1]) if i + 1 < len(offs) else None
-    return varint_decode(memoryview(payload)[off:end], cnt)
 
 
 def _decode_doc_ids(enc_row) -> np.ndarray:
